@@ -183,6 +183,10 @@ def labels_df(spark, labels: dict) -> DataFrame:
     cap the pickled path measured ~1.5s per call, the Arrow path ~50ms."""
     import pandas as pd
 
+    if not labels:
+        # an empty pandas frame skips the Arrow path and plans as an RDD
+        # scan; a limit-0 relation is one the optimizer prunes instead
+        return spark.createDataFrame([], "doc_id bigint, label bigint").limit(0)
     items = sorted(labels.items())
     pdf = pd.DataFrame(items, columns=["doc_id", "label"], dtype="int64")
     return spark.createDataFrame(pdf, "doc_id bigint, label bigint")

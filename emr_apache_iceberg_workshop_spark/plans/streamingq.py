@@ -999,12 +999,15 @@ def q_stream_cdc_store(spark, sf_dir) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming cluster maintenance: the foreachBatch twin of
 # d_incremental_clusters — each document micro-batch folded into the
-# persisted component labels as it arrives. No replay stamp is needed
-# for correctness here (unlike the summed-count MERGE folds): both
-# commits a fold makes are idempotent by construction — the signature
-# append is keyed-idempotent (`_append_new_ids` anti-join) and the label
-# MERGE re-asserts identical labels on a replay — so the at-least-once
-# foreachBatch contract converges to exactly-once state.
+# persisted component labels as it arrives — the insert-only case of the
+# cluster tier's one delta operator (fold_batch_clusters). No replay stamp
+# is needed for correctness here (unlike the summed-count MERGE folds):
+# both commits a fold makes are idempotent by construction — the
+# signature append is keyed-idempotent (`_append_new_ids` anti-join) and
+# the label MERGE re-asserts identical labels on a replay, whose edge
+# probe sees the same edges whether or not the first run's append landed
+# — so the at-least-once foreachBatch contract converges to exactly-once
+# state.
 
 from .dedup import INCR_CLUSTERS_ORACLE as _INCR_CLUSTERS_ORACLE  # noqa: E402
 
@@ -1099,15 +1102,13 @@ def q_stream_cluster_maintain(spark, sf_dir) -> DataFrame:
 # the cluster tier — q_stream_cdc_store proves CDC folding for the
 # SIGNATURE store; this proves it for the DERIVED label state, where a
 # delete or an update's retraction can SPLIT a component. Per micro-batch:
-# retract-then-fold, the same sequence apply_cdc_batch applies to flat
-# stores — D ∪ U keys first through retract_batch_clusters (old
-# signatures equality-deleted, affected components re-labeled from the
-# store's surviving edges), then I ∪ U rows through fold_batch_clusters
-# (new signatures appended, edge-touched components re-contracted).
-# Replay-safe with NO stamp: retraction re-runs to the same state (the
-# re-derived survivor edges are unchanged) and the fold's two commits are
-# idempotent by construction — a replayed U re-deletes its own new
-# signatures and re-appends identical ones, converging to the same state.
+# ONE delta (apply_cdc_batch_clusters) — I ∪ U rows are the upserts and
+# D ∪ U keys the deletes of a single signature commit, edge probe,
+# union-find and label MERGE; components a deleted key sat in are
+# re-labeled from the store's surviving edges, components a new edge
+# touches are re-contracted. Replay-safe with NO stamp: the probe's edge
+# set does not depend on whether the signature commit landed, and every
+# commit is idempotent, so a replayed batch converges to the same state.
 
 from .dedup import clusters_oracle as _clusters_oracle  # noqa: E402
 
@@ -1129,12 +1130,11 @@ from .dedup import clusters_oracle as _clusters_oracle  # noqa: E402
 def q_stream_cluster_cdc(spark, sf_dir) -> DataFrame:
     """CDC-maintained dup-cluster labels: the I/U/D feed drained as three
     micro-batches into an initially-empty signature-store + label-store
-    pair, each batch applied retract-then-fold — deletes and updates
-    first retract their keys (component splits re-derived from surviving
-    signatures), then inserts and updated texts fold in (component merges
-    re-contracted). The graded output is the drained LABEL-STORE STATE,
-    matched against the from-scratch component recompute over the
-    post-CDC corpus."""
+    pair, each batch applied as one delta — deleted and updated keys
+    leave their components (splits re-derived from surviving signatures)
+    while inserts and updated texts join theirs (merges re-contracted).
+    The graded output is the drained LABEL-STORE STATE, matched against
+    the from-scratch component recompute over the post-CDC corpus."""
     from ..tables import SnapshotTable
     from .dedup import _LABELS_DDL, _SIG_DDL, apply_cdc_batch_clusters
 
@@ -1152,11 +1152,10 @@ def q_stream_cluster_cdc(spark, sf_dir) -> DataFrame:
     ).parquet(_cdc_stream_src_dir(spark, sf_dir))
 
     def _fb(bdf, batch_id: int) -> None:
-        # Fused CDC apply (r15): ONE gating collect (the op/doc_id pairs,
-        # micro-batch-bounded), one union-find, one label MERGE per mixed
-        # batch — apply_cdc_batch_clusters owns the retract-then-fold
-        # sequencing, the same-key D+U upsert-wins resolution (ADVICE
-        # r14, documented there), and the distributed fallbacks.
+        # One CDC delta per micro-batch: apply_cdc_batch_clusters owns
+        # the op split, the same-key D+U upsert-wins resolution and the
+        # distributed path; insert-only and delete-only batches run the
+        # same sequence as mixed ones.
         apply_cdc_batch_clusters(bdf.sparkSession, bdf, sig_store, label_store)
 
     with _microbatch_confs(spark):

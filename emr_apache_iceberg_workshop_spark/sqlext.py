@@ -79,9 +79,9 @@ Supported grammar (case-insensitive keywords; one statement per call):
   stores — doc_id-keyed, mutually exclusive with ``key``) /
   ``apply_cdc_clusters('<store>', source => '<view>',
   labels => '<label store>')``
-  (extension, r15: the FUSED I/U/D apply for the cluster tier — one
-  op-column signature MERGE + one label MERGE per batch via
-  `apply_cdc_batch_clusters`; returns the post-apply label state) —
+  (extension, r15: the I/U/D apply for the cluster tier — each batch is
+  one delta via `apply_cdc_batch_clusters`: one signature commit, one
+  union-find, one label MERGE; returns the post-apply label state) —
   named (``arg => v``) or positional.
 - ``ALTER TABLE <name> RENAME TO <new>`` (catalog re-key, data in place)
   / ``ADD COLUMN[S] (c type, ...)`` / ``DROP COLUMN c``
@@ -946,14 +946,14 @@ class SqlCatalog:
                 )
             return retract_batch(t, ids, key=key)
         if proc == "apply_cdc_clusters":
-            # extension procedure (r15): the fused CDC apply for the
-            # cluster tier — one micro-batch of (Op, doc_id, text) rows
-            # from `source` folded into the signature store (`table`) +
-            # label store (labels =>) with ONE op-column signature MERGE
-            # and ONE label MERGE (plans/dedup.py
-            # apply_cdc_batch_clusters; same-key D+U resolves
-            # upsert-wins, documented there). Returns the post-apply
-            # label state for inspection.
+            # extension procedure (r15): the CDC apply for the cluster
+            # tier — one micro-batch of (Op, doc_id, text) rows from
+            # `source` applied to the signature store (`table`) + label
+            # store (labels =>) as one delta: one signature commit in the
+            # batch kind's shape, one union-find, one label MERGE
+            # (plans/dedup.py apply_cdc_batch_clusters; same-key D+U
+            # resolves upsert-wins, documented there). Returns the
+            # post-apply label state for inspection.
             src = val("source", 1)
             labels_name = val("labels", 2)
             if src is None or labels_name is None:

@@ -99,39 +99,19 @@ class Snapshot:
 
 
 def _probe_collect(df, cap: int) -> list:
-    """Completeness-probe collect: `df.limit(cap + 1).collect()` with the
-    incremental-limit scale-up disabled for THIS collect only.
+    """Completeness-probe collect: the rows of `df.limit(cap + 1)`, where
+    <= cap rows back proves the probe read the ENTIRE set.
 
-    Spark's CollectLimit executes incrementally (1 partition, then 4×
-    more per `spark.sql.limit.scaleUpFactor`, …) — right for top-N
-    sampling, pure overhead for a completeness probe: the probe expects
-    to read the ENTIRE set (≤ cap rows back proves it did), so the first
-    attempt almost never satisfies `cap + 1` and every retry is an extra
-    scheduled job over the same shuffle output (measured r15: 5 → 3 jobs,
-    ~0.1s per probe on an idle host, more under load).
-    `initialNumPartitions` is pinned high around the collect and restored
-    after, so sampling limits elsewhere (e.g. the k-means sample window)
-    keep their early-exit.
-
-    Single-threaded-driver assumption (ADVICE r15): the pin mutates the
-    SESSION conf, so a query planned concurrently in another driver
-    thread of this session would briefly lose CollectLimit early-exit,
-    and two concurrent probes could clobber each other's saved value.
-    Every current caller runs on the single driver thread (foreachBatch
-    drains execute their batch function serially; the one-shot operators
-    are sequential) — if a multi-threaded driver path is ever added,
-    guard this with a lock or move the conf to a cloned session."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "1000000")
-    try:
-        return df.limit(cap + 1).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    `collect()` would run Spark's CollectLimit incrementally (1
+    partition, then 4× more per `spark.sql.limit.scaleUpFactor`, …) —
+    right for top-N sampling, pure overhead for a completeness probe,
+    whose first attempt almost never satisfies `cap + 1`, so every retry
+    is an extra scheduled job over the same input. Iterating the limited
+    plan with `toLocalIterator` runs it as one global limit instead: the
+    same rows as `limit(cap + 1).collect()`, no retries, and no write to
+    the session conf — so it is safe when several driver threads plan
+    queries at once."""
+    return list(df.limit(cap + 1).toLocalIterator())
 
 
 def _entry_rel(e) -> str:

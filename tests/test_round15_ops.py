@@ -396,9 +396,9 @@ def _drain(spark, batches, sig, lab, fused: bool):
 
 
 def test_fused_cdc_apply_equals_unfused_sequence(spark, tmp_path):
-    """apply_cdc_batch_clusters (one sig MERGE + one label MERGE + one
-    union-find per mixed batch) must land the exact label state of the
-    unfused retract-then-fold sequence across an I/U/D lifecycle."""
+    """apply_cdc_batch_clusters (one delta operator per mixed batch) must
+    land the exact label state of the separate retract-then-fold wrapper
+    calls across an I/U/D lifecycle."""
     s1, l1 = _mk_stores(spark, tmp_path, "fused")
     s2, l2 = _mk_stores(spark, tmp_path, "unfused")
     got = _drain(spark, _cdc_batches(spark), s1, l1, fused=True)
@@ -421,6 +421,95 @@ def test_fused_cdc_apply_fallback_matches_fast(spark, tmp_path, monkeypatch):
     s2, l2 = _mk_stores(spark, tmp_path, "slow")
     exp = _drain(spark, _cdc_batches(spark), s2, l2, fused=True)
     assert got == exp and got
+
+
+def test_cdc_apply_randomized_equivalence(spark, tmp_path, monkeypatch):
+    """One-seed default-run representative of the CDC apply fuzz; the
+    remaining seeds run under -m slow."""
+    _cdc_apply_randomized_equivalence(spark, tmp_path, monkeypatch, (5,))
+
+
+@pytest.mark.slow
+def test_cdc_apply_randomized_sweep(spark, tmp_path, monkeypatch):
+    _cdc_apply_randomized_equivalence(spark, tmp_path, monkeypatch, (31, 64))
+
+
+def _cdc_apply_randomized_equivalence(spark, tmp_path, monkeypatch, seeds):
+    """Seeded I/U/D fuzz: a random dup-group topology fed as four CDC
+    micro-batches — inserts; inserts + updates (a doc may change group)
+    + deletes; deletes only; re-inserts of deleted ids + deletes +
+    inserts — must leave the label AND signature stores equal to a
+    from-scratch `build_signature_store` + `build_label_store` over the
+    post-CDC universe, with no ghost label left behind, on both the
+    bounded driver path and the distributed path (_CLUSTER_LOCAL_MAX=0)."""
+    import emr_apache_iceberg_workshop_spark.plans.dedup as D
+    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
+
+    vocab = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+    ddl = "Op string, doc_id bigint, text string"
+    default_cap = D._CLUSTER_LOCAL_MAX
+    for seed in seeds:
+        rng = random.Random(seed)
+        groups = [
+            " ".join(rng.sample(vocab, 12)) + f" group{g}" for g in range(6)
+        ]
+
+        def text(i):
+            g = rng.randrange(6)
+            return groups[g] + (f" v{i % 3}" if rng.random() < 0.5 else "")
+
+        ids = list(range(32))
+        rng.shuffle(ids)
+        b0 = [("I", i, text(i)) for i in ids[:16]]
+        upd = rng.sample(ids[:16], 4)
+        gone1 = rng.sample([i for i in ids[:16] if i not in upd], 3)
+        b1 = (
+            [("I", i, text(i)) for i in ids[16:24]]
+            + [("U", i, text(i)) for i in upd]
+            + [("D", i, None) for i in gone1]
+        )
+        live1 = sorted(set(ids[:24]) - set(gone1))
+        gone2 = rng.sample(live1, 4)
+        b2 = [("D", i, None) for i in gone2]
+        gone3 = rng.sample(sorted(set(live1) - set(gone2)), 2)
+        b3 = (
+            [("I", i, text(i)) for i in gone1[:2] + ids[24:]]
+            + [("D", i, None) for i in gone3]
+        )
+        live = {}
+        for batch in (b0, b1, b2, b3):
+            for op, i, t in batch:
+                if op == "D":
+                    live.pop(i, None)
+                else:
+                    live[i] = t
+
+        base = tmp_path / f"c{seed}"
+        base.mkdir()
+        full_sig = str(base / "fsigs")
+        build = spark.createDataFrame(sorted(live.items()), "doc_id bigint, text string")
+        D.build_signature_store(spark, build, full_sig)
+        truth_sig = SnapshotTable(spark, full_sig)
+        truth = sorted(
+            D.build_label_store(spark, truth_sig, str(base / "flabels")).scan().collect()
+        )
+        truth_sigs = sorted(truth_sig.scan().collect())
+        for tag, cap in (("fast", default_cap), ("dist", 0)):
+            monkeypatch.setattr(D, "_CLUSTER_LOCAL_MAX", cap)
+            sig, lab = _mk_stores(spark, base, tag)
+            for batch in (b0, b1, b2, b3):
+                D.apply_cdc_batch_clusters(
+                    spark, spark.createDataFrame(batch, ddl), sig, lab
+                )
+            got = sorted(lab.scan().collect())
+            assert got == truth, f"seed {seed} {tag}: labels diverged"
+            assert sorted(sig.scan().collect()) == truth_sigs, (
+                f"seed {seed} {tag}: signatures diverged"
+            )
+            assert {r.doc_id for r in got} == set(live), (
+                f"seed {seed} {tag}: ghost or missing labels"
+            )
 
 
 def test_fold_fast_path_matches_fallback(spark, tmp_path, monkeypatch):
@@ -493,6 +582,23 @@ def test_probe_collect_equals_plain_limit_collect(spark):
         assert spark.conf.get(key) == "7"
     finally:
         spark.conf.unset(key)
+
+
+def test_probe_collect_leaves_session_conf_alone(spark, monkeypatch):
+    """The probe must not write the session conf — a set/restore around
+    the collect races once more than one driver thread plans queries."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from emr_apache_iceberg_workshop_spark.tables import _probe_collect
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("_probe_collect wrote the session conf")
+
+    df = spark.range(500).selectExpr("id % 97 AS k").groupBy("k").count()
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    monkeypatch.setattr(RuntimeConfig, "unset", refuse)
+    assert len(_probe_collect(df, 1000)) == 97
+    assert len(_probe_collect(df, 10)) == 11
 
 
 def test_probe_collect_schedules_fewer_jobs(spark, tmp_path):

@@ -184,6 +184,26 @@ def test_band_index_probe_prunes_manifest_files(spark, tmp_path):
     assert via_index == via_store
 
 
+def _batch_band_candidates(batch_sig, others):
+    """Banded candidate pairs for a batch, (doc_a < doc_b) distinct:
+    batch-vs-store band collisions plus batch-internal ones — the r15
+    candidate shape the fused est_sim join is pinned against."""
+    from emr_apache_iceberg_workshop_spark.plans.dedup import _bands_long
+
+    bl = _bands_long(batch_sig, "b_id")
+    vs_store = bl.join(_bands_long(others, "s_id"), ["band_idx", "band_key"]).selectExpr(
+        "least(b_id, s_id) AS doc_a", "greatest(b_id, s_id) AS doc_b"
+    )
+    x, y = bl.alias("x"), bl.selectExpr("b_id AS y_id", "band_idx", "band_key").alias("y")
+    vs_self = x.join(
+        y,
+        (F.col("x.band_idx") == F.col("y.band_idx"))
+        & (F.col("x.band_key") == F.col("y.band_key"))
+        & (F.col("x.b_id") < F.col("y.y_id")),
+    ).selectExpr("b_id AS doc_a", "y_id AS doc_b")
+    return vs_store.unionByName(vs_self).distinct()
+
+
 def test_incremental_dedup_est_sim_rides_band_join(spark, tmp_path):
     """The fused est_sim form must reproduce the r15 lookup-join result
     exactly: one row per banded pair, est_sim = signature agreement /
@@ -216,10 +236,6 @@ def test_incremental_dedup_est_sim_rides_band_join(spark, tmp_path):
     }
     # reference: the r15 shape — distinct banded pairs, then two
     # signature-lookup joins
-    from emr_apache_iceberg_workshop_spark.plans.dedup import (
-        _batch_band_candidates,
-    )
-
     batch_sig = minhash_signature_df(batch).localCheckpoint(eager=True)
     others = store.scan().join(batch_sig.select("doc_id"), "doc_id", "left_anti")
     cand = _batch_band_candidates(batch_sig, others)
